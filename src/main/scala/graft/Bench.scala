@@ -36,22 +36,11 @@ object Bench {
     // shape: real executor JVMs, shuffle/broadcast over netty (see
     // ClusterMode). Default stays single-JVM local[cpus].
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val isCluster = master.startsWith("local-cluster")
     // local-cluster[w,c,m]: per-worker grant; executors take the full grant.
-    // Whitespace allowed exactly where Spark's own SparkMasterRegex allows
-    // it (ADVICE r15: 'local-cluster[2, 4, 4096]' is a valid Spark spec).
-    val clusterSpec =
-      "local-cluster\\[\\s*(\\d+)\\s*,\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\]".r
-    val (executorMemMb, totalCores) = master match {
-      case clusterSpec(w, c, m) => (m.toInt, w.toInt * c.toInt)
-      case _ if isCluster =>
-        // A malformed spec would otherwise fall through to executorMemMb=0
-        // and size the broadcast threshold from a zero-byte heap.
-        sys.error(
-          s"SPARK_GRAFT_MASTER looks like local-cluster but does not match " +
-            s"local-cluster[w,c,memMb]: '$master'")
-      case _ => (0, cpus.toInt)
-    }
+    val cluster = ClusterMode.spec(master)
+    val isCluster = cluster.isDefined
+    val (executorMemMb, totalCores) =
+      cluster.fold((0, cpus.toInt))(c => (c.memMb, c.workers * c.cores))
     // Broadcast threshold must be sized from EXECUTOR heap (the process
     // that builds/holds the hashed relation), which is the driver's own
     // heap only in local mode.

@@ -33,15 +33,10 @@ object BenchOne {
     // multi-executor shape (same contract as Bench — real executor JVMs,
     // netty shuffle); broadcast threshold then sizes from EXECUTOR heap.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val isCluster = master.startsWith("local-cluster")
-    val clusterSpec =
-      "local-cluster\\[\\s*(\\d+)\\s*,\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\]".r
-    val (executorMemMb, totalCores) = master match {
-      case clusterSpec(w, c, m) => (m.toInt, w.toInt * c.toInt)
-      case _ if isCluster =>
-        sys.error(s"SPARK_GRAFT_MASTER does not match local-cluster[w,c,memMb]: '$master'")
-      case _ => (0, cpus.toInt)
-    }
+    val cluster = ClusterMode.spec(master)
+    val isCluster = cluster.isDefined
+    val (executorMemMb, totalCores) =
+      cluster.fold((0, cpus.toInt))(c => (c.memMb, c.workers * c.cores))
     if (isCluster) ClusterMode.ensureSparkHomeShim()
     val builder = SparkSession.builder()
       .master(master)

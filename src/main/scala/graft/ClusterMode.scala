@@ -81,6 +81,26 @@ object ClusterMode {
     Files.createDirectories(home.resolve("launcher/target/scala-2.13"))
   }
 
+  /** `local-cluster[workers, coresPerWorker, memMbPerWorker]`. */
+  case class Spec(workers: Int, cores: Int, memMb: Int)
+
+  // Spark's own LOCAL_CLUSTER_REGEX: whitespace allowed around each number
+  // ('local-cluster[2, 4, 4096]' is a valid Spark master).
+  private val SpecRegex =
+    """local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*]""".r
+
+  /** The local-cluster spec of `master`; None for any other master. A
+    * `local-cluster` master that does not parse fails loudly: a fallback
+    * would size executors and the broadcast threshold from a made-up
+    * heap. */
+  def spec(master: String): Option[Spec] = master match {
+    case SpecRegex(w, c, m) => Some(Spec(w.toInt, c.toInt, m.toInt))
+    case _ if master.startsWith("local-cluster") =>
+      throw new IllegalArgumentException(
+        s"master '$master' does not match local-cluster[workers,cores,memMb]")
+    case _ => None
+  }
+
   /** Engine session on a local-cluster master. `master` e.g.
     * "local-cluster[2,4,2048]" (workers, cores/worker, MB/worker);
     * `executorMemMb` must fit inside the per-worker grant. */

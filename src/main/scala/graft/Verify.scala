@@ -11,8 +11,8 @@ object Verify {
     // across real executor JVMs (same wiring as Bench/ClusterMode) — the
     // multi-executor rehearsal's correctness half.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val isCluster = master.startsWith("local-cluster")
-    if (isCluster) ClusterMode.ensureSparkHomeShim()
+    val cluster = ClusterMode.spec(master)
+    if (cluster.isDefined) ClusterMode.ensureSparkHomeShim()
     val builder = SparkSession.builder()
       .master(master)
       // engine extensions (function pack, planner strategy, broadcast
@@ -23,11 +23,9 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    if (isCluster) {
-      val clusterSpec = "local-cluster\\[(\\d+),(\\d+),(\\d+)\\]".r
-      val memMb = master match { case clusterSpec(_, _, m) => m.toInt; case _ => 2048 }
+    cluster.foreach { c =>
       builder
-        .config("spark.executor.memory", s"${memMb}m")
+        .config("spark.executor.memory", s"${c.memMb}m")
         .config("spark.executor.extraClassPath", ClusterMode.absoluteClassPath)
         .config("spark.executor.extraJavaOptions", ClusterMode.executorJavaOptions)
         .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -40,38 +39,11 @@ object BandHashes {
     new GenericArrayData(out)
   }
 
-  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      BandHashesExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(sig),
-        bands, rowsPerBand))
-}
-
-/** band_hashes(array<bigint>, bands, rowsPerBand) → array<bigint>. */
-case class BandHashesExpression(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && rowsPerBand >= 1,
-    s"band_hashes: bands=$bands rowsPerBand=$rowsPerBand must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"band_hashes expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    BandHashes.eval(v.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.BandHashes.eval($c, $bands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(newChild: Expression): BandHashesExpression =
-    copy(child = newChild)
-  override def prettyName: String = "band_hashes"
+  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column = {
+    require(bands >= 1 && rowsPerBand >= 1,
+      s"band_hashes: bands=$bands rowsPerBand=$rowsPerBand must be positive")
+    Kernel.call(this, "eval", ArrayType(LongType, containsNull = false))(
+      Kernel.in(sig, Kernel.LongArray),
+      Kernel.const(Literal(bands)), Kernel.const(Literal(rowsPerBand)))
+  }
 }

@@ -28,7 +28,7 @@ object GraftFunctions {
   /** name -> Catalyst expression builder (arity-checked at build time). */
   val injections: Seq[(String, FunctionBuilder)] = Seq(
     // --- utility (be/src/exprs/utility-functions.cc) ---
-    "fnv_hash" -> ((args: Seq[Expression]) => FnvHashExpression(args.head)),
+    "fnv_hash" -> ((args: Seq[Expression]) => toExpr(FnvHash(toCol(args.head)))),
     // user()/effective_user(): the session's authenticated principal —
     // CurrentUser resolves via the ReplaceCurrentLike rule to the session
     // user, the Spark analogue of the reference's connected-user lookup.

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -53,10 +50,10 @@ object HyperplaneLsh {
     w
   }
 
-  /** 8-bit signature; accumulation is index-order double arithmetic (same
-    * IEEE order as the HOF formulation it replaced). Null elements
-    * contribute 0. */
-  def signature(emb: ArrayData, tbl: Int, isFloat: Boolean): Int = {
+  /** 8-bit signature of a float embedding; accumulation is index-order
+    * double arithmetic (same IEEE order as the HOF formulation it
+    * replaced). Null elements contribute 0. */
+  def signature(emb: ArrayData, tbl: Int): Int = {
     val n = emb.numElements()
     val w = weights(tbl, n)
     var bucket = 0
@@ -66,8 +63,7 @@ object HyperplaneLsh {
       var d = 0
       while (d < n) {
         if (!emb.isNullAt(d)) {
-          val x = if (isFloat) emb.getFloat(d).toDouble else emb.getDouble(d)
-          acc += x * w(p * n + d)
+          acc += emb.getFloat(d).toDouble * w(p * n + d)
         }
         d += 1
       }
@@ -77,45 +73,14 @@ object HyperplaneLsh {
     bucket
   }
 
-  def apply(emb: Column, tbl: Column): Column =
-    ColumnBridge.column(HyperplaneSignature(
-      ColumnBridge.expression(emb), ColumnBridge.expression(tbl)))
-}
-
-case class HyperplaneSignature(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hyperplane_signature"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), IntegerType) =>
-        // the weight matrices memoize per (tbl, dims) in a process-wide
-        // cache; a per-row tbl would grow it without bound, so the hash
-        // table index must be a literal (it is the LSH table number, a
-        // configuration constant, never data)
-        if (right.foldable) TypeCheckResult.TypeCheckSuccess
-        else TypeCheckResult.TypeCheckFailure(
-          "hyperplane_signature: the table index must be a literal")
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_signature expects (array<float|double>, int), got $other")
-    }
-
-  private lazy val isFloat =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(emb: Any, tbl: Any): Any =
-    HyperplaneLsh.signature(
-      emb.asInstanceOf[ArrayData], tbl.asInstanceOf[Int], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, t) =>
-      s"graft.functions.HyperplaneLsh.signature($a, $t, $isFloat)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HyperplaneSignature =
-    copy(left = newLeft, right = newRight)
+  def apply(emb: Column, tbl: Column): Column = {
+    // the weight matrices memoize per (tbl, dims) in a process-wide cache;
+    // a per-row tbl would grow it without bound, so the hash table index
+    // must be a literal (it is the LSH table number, a configuration
+    // constant, never data)
+    require(ColumnBridge.expressionEager(tbl).foldable,
+      "hyperplane_signature: the table index must be a literal")
+    Kernel.call(this, "signature", IntegerType)(
+      Kernel.in(emb, Kernel.FloatArray), Kernel.in(tbl, IntegerType))
+  }
 }

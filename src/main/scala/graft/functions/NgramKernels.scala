@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback, so every gram paid an interpreted lambda dispatch plus
   * n interpreted `element_at` + `concat_ws` evaluations — per gram window,
   * per row, on every shingling pass (and the dedup tiers shingle the corpus
-  * up to three times per query). These expressions compute the identical
+  * up to three times per query). These kernels compute the identical
   * values in one static-call pass inside whole-stage codegen:
   *
   *  - [[WordNgrams]]: the gram STRINGS — byte-identical to
@@ -24,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    array` (the old `when(size < n)` guard folded in) and optional
   *    `array_distinct` semantics (first-occurrence order, binary equality).
   *  - [[NgramFnv]]: the FNV-1a-64 hashes of the DISTINCT gram strings,
-  *    folding [[FnvHash.hashUtf8]] over each window's token bytes with the
+  *    folding [[FnvHash.hash]] over each window's token bytes with the
   *    single 0x20 separator byte between non-null tokens — bit-equal to
   *    `transform(array_distinct(grams), fnv_hash)` without ever
   *    materializing a gram string. Distinctness is by the 64-bit hash
@@ -40,36 +39,22 @@ object NgramKernels {
 
   private val EmptyArray = new GenericArrayData(new Array[Any](0))
 
-  /** Null-input result of the gram kernels: the replaced composite ran
-    * under the engine's `ansi=false` sessions where legacy `size(null)`
-    * is −1, so its `when(size(toks) < n, ...)` guard mapped a NULL token
-    * array to an EMPTY gram array (never null) — these kernels must do the
-    * same or null-text rows flip the oracle hash (q_text_repetition's
-    * per-window fractions read 0.0 off the empty array). */
-  def emptyArray(): ArrayData = EmptyArray
-
-  /** Codegen for the null→empty gram expressions: evaluate the child, then
-    * one ternary into a never-null ArrayData slot. */
-  private[functions] def genNullToEmpty(
-      ctx: CodegenContext, ev: ExprCode, child: Expression,
-      call: String => String): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val resultCode =
-      s"org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-        s"${childGen.isNull} ? graft.functions.NgramKernels.emptyArray() : " +
-        s"${call(childGen.value.toString)};"
-    ev.copy(
-      code = childGen.code + code"$resultCode",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  /** Null input yields the EMPTY gram array (never null) in both gram
+    * kernels: the replaced composite ran under the engine's `ansi=false`
+    * sessions where legacy `size(null)` is −1, so its `when(size(toks) < n,
+    * ...)` guard mapped a NULL token array to an empty one — the kernels
+    * must do the same or null-text rows flip the oracle hash
+    * (q_text_repetition's per-window fractions read 0.0 off the empty
+    * array). */
+  private def tooShort(a: ArrayData, n: Int): Boolean =
+    a == null || a.numElements() < n
 
   /** Exact `concat_ws(" ", window)` grams; `distinct` keeps first
-    * occurrences (array_distinct semantics). Caller guarantees non-null
-    * input; L < n yields an empty array. */
+    * occurrences (array_distinct semantics). Null input or L < n yields an
+    * empty array. */
   def grams(a: ArrayData, n: Int, distinct: Boolean): ArrayData = {
+    if (tooShort(a, n)) return EmptyArray
     val len = a.numElements()
-    if (len < n) return EmptyArray
     val toks = new Array[UTF8String](len)
     var i = 0
     while (i < len) {
@@ -110,8 +95,8 @@ object NgramKernels {
     * separator byte between consecutive non-null tokens (an all-null
     * window hashes like the empty string — the FNV basis). */
   def gramFnv(a: ArrayData, n: Int): ArrayData = {
+    if (tooShort(a, n)) return EmptyArray
     val len = a.numElements()
-    if (len < n) return EmptyArray
     val toks = new Array[Array[Byte]](len)
     var i = 0
     while (i < len) {
@@ -158,7 +143,7 @@ object NgramKernels {
       val out = new Array[Long](len)
       i = 0
       while (i < len) {
-        out(i) = FnvHash.hashUtf8(a.getUTF8String(i))
+        out(i) = FnvHash.hash(a.getUTF8String(i))
         i += 1
       }
       new GenericArrayData(out)
@@ -166,7 +151,7 @@ object NgramKernels {
       val out = new Array[Any](len)
       i = 0
       while (i < len) {
-        if (!a.isNullAt(i)) out(i) = FnvHash.hashUtf8(a.getUTF8String(i))
+        if (!a.isNullAt(i)) out(i) = FnvHash.hash(a.getUTF8String(i))
         i += 1
       }
       new GenericArrayData(out)
@@ -174,114 +159,31 @@ object NgramKernels {
   }
 }
 
-/** word_ngrams(array<string>, n, distinct) → array<string>; a null token
-  * array yields the EMPTY gram array (see [[NgramKernels.emptyArray]]). */
-case class WordNgramsExpression(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_ngrams expects array<string>, got $other")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) NgramKernels.emptyArray()
-    else NgramKernels.grams(v.asInstanceOf[ArrayData], n, distinct)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    NgramKernels.genNullToEmpty(ctx, ev, child,
-      c => s"graft.functions.NgramKernels.grams($c, $n, $distinct)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgramsExpression =
-    copy(child = newChild)
-  override def prettyName: String = "word_ngrams"
-}
-
+/** word_ngrams(array<string>, n, distinct) → array<string>. */
 object WordNgrams {
-  def apply(toks: Column, n: Int, distinct: Boolean): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      WordNgramsExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(toks), n, distinct))
+  def apply(toks: Column, n: Int, distinct: Boolean): Column = {
+    require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
+    Kernel.call(NgramKernels, "grams", ArrayType(StringType, containsNull = false),
+      propagateNull = false)(
+      Kernel.in(toks, Kernel.StringArray),
+      Kernel.const(Literal(n)), Kernel.const(Literal(distinct)))
+  }
 }
 
 /** ngram_fnv(array<string>, n) → array<bigint> (distinct gram hashes,
-  * first-occurrence order); null token array → empty, like [[WordNgrams]]. */
-case class NgramFnvExpression(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"ngram_fnv: n must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_fnv expects array<string>, got $other")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) NgramKernels.emptyArray()
-    else NgramKernels.gramFnv(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    NgramKernels.genNullToEmpty(ctx, ev, child,
-      c => s"graft.functions.NgramKernels.gramFnv($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): NgramFnvExpression =
-    copy(child = newChild)
-  override def prettyName: String = "ngram_fnv"
-}
-
+  * first-occurrence order). */
 object NgramFnv {
-  def apply(toks: Column, n: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      NgramFnvExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(toks), n))
+  def apply(toks: Column, n: Int): Column = {
+    require(n >= 1, s"ngram_fnv: n must be >= 1, got $n")
+    Kernel.call(NgramKernels, "gramFnv", ArrayType(LongType, containsNull = false),
+      propagateNull = false)(
+      Kernel.in(toks, Kernel.StringArray), Kernel.const(Literal(n)))
+  }
 }
 
 /** fnv_hash_array(array<string>) → array<bigint> (elementwise fnv_hash). */
-case class FnvHashArrayExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = child.dataType match {
-    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
-    case _ => ArrayType(LongType, containsNull = true)
-  }
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"fnv_hash_array expects array<string>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    NgramKernels.fnvArray(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramKernels.fnvArray($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): FnvHashArrayExpression =
-    copy(child = newChild)
-  override def prettyName: String = "fnv_hash_array"
-}
-
 object FnvHashArray {
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      FnvHashArrayExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+    Kernel.call(NgramKernels, "fnvArray", ArrayType(LongType))(
+      Kernel.in(c, Kernel.StringArray))
 }

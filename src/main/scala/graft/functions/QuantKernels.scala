@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -21,7 +19,7 @@ import org.apache.spark.sql.types._
   */
 object QuantKernels {
 
-  def absMax(a: ArrayData): Any = {
+  def absMax(a: ArrayData): java.lang.Double = {
     val n = a.numElements()
     var has = false
     var best = 0.0
@@ -69,79 +67,15 @@ object QuantKernels {
 }
 
 /** abs_max(array<float>) → double (null for empty/all-null). */
-case class AbsMaxExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"abs_max expects array<float>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    QuantKernels.absMax(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val resultCode =
-      s"""boolean ${ev.isNull} = true;
-         |double ${ev.value} = 0.0;
-         |if (!${childGen.isNull}) {
-         |  Object r = graft.functions.QuantKernels.absMax(${childGen.value});
-         |  if (r != null) { ${ev.isNull} = false; ${ev.value} = ((Double) r).doubleValue(); }
-         |}""".stripMargin
-    ev.copy(code = childGen.code + code"$resultCode")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AbsMaxExpression =
-    copy(child = newChild)
-  override def prettyName: String = "abs_max"
-}
-
 object AbsMax {
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      AbsMaxExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+    Kernel.call(QuantKernels, "absMax", DoubleType, returnNullable = true)(
+      Kernel.in(c, Kernel.FloatArray))
 }
 
 /** int8_quantize(array<float>, s: double) → array<bigint>. */
-case class Int8QuantizeExpression(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = left.dataType match {
-    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
-    case _ => ArrayType(LongType, containsNull = true)
-  }
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"int8_quantize expects (array<float>, double), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, s: Any): Any =
-    QuantKernels.quantize(a.asInstanceOf[ArrayData], s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, s) => s"graft.functions.QuantKernels.quantize($a, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Int8QuantizeExpression =
-    copy(left = l, right = r)
-  override def prettyName: String = "int8_quantize"
-}
-
 object Int8Quantize {
   def apply(emb: Column, s: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      Int8QuantizeExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(emb),
-        org.apache.spark.sql.graft.ColumnBridge.expression(s)))
+    Kernel.call(QuantKernels, "quantize", ArrayType(LongType))(
+      Kernel.in(emb, Kernel.FloatArray), Kernel.in(s, DoubleType))
 }

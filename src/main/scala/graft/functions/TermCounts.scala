@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -53,30 +51,7 @@ object TermCounts {
   }
 
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      TermCountsExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-case class TermCountsExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"term_counts expects array<string>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    TermCounts.fromArrayData(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TermCounts.fromArrayData($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TermCountsExpression =
-    copy(child = newChild)
+    Kernel.call(this, "fromArrayData",
+      MapType(StringType, LongType, valueContainsNull = false))(
+      Kernel.in(c, Kernel.StringArray))
 }

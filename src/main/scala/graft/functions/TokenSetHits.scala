@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,6 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - otherwise the count of ALL occurrences (duplicates count). */
 object TokenSetHits {
   def count(a: ArrayData, set: java.util.HashSet[UTF8String]): Int = {
+    if (a == null) return -1
     val n = a.numElements()
     var c = 0
     var i = 0
@@ -37,55 +35,12 @@ object TokenSetHits {
     c
   }
 
-  def apply(toks: Column, words: Seq[String]): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      TokenSetHitsExpression(
-        org.apache.spark.sql.graft.ColumnBridge.expression(toks), words))
-}
-
-/** token_set_hits(array<string>, words) → int (−1 for a null array, the
-  * legacy size(null) the replaced composite produced). */
-case class TokenSetHitsExpression(child: Expression, words: Seq[String])
-    extends UnaryExpression {
-
-  @transient private lazy val wordSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](words.size * 2)
-    words.foreach(w => s.add(UTF8String.fromString(w)))
-    s
+  /** token_set_hits(array<string>, words) → int; the word set rides in the
+    * plan as an object literal, built once per call site. */
+  def apply(toks: Column, words: Seq[String]): Column = {
+    val set = new java.util.HashSet[UTF8String](words.size * 2)
+    words.foreach(w => set.add(UTF8String.fromString(w)))
+    Kernel.call(this, "count", IntegerType, propagateNull = false)(
+      Kernel.in(toks, Kernel.StringArray), Kernel.const(Literal.fromObject(set)))
   }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_set_hits expects array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) -1
-    else TokenSetHits.count(v.asInstanceOf[ArrayData], wordSet)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    // raw type: Janino's generics support is limited; count()'s signature
-    // provides the typing
-    val setRef = ctx.addReferenceObj("wordSet", wordSet, "java.util.HashSet")
-    val resultCode =
-      s"int ${ev.value} = ${childGen.isNull} ? -1 : " +
-        s"graft.functions.TokenSetHits.count(${childGen.value}, $setRef);"
-    ev.copy(
-      code = childGen.code + code"$resultCode",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokenSetHitsExpression =
-    copy(child = newChild)
-  override def prettyName: String = "token_set_hits"
 }

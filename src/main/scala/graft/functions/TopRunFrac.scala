@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,31 +46,6 @@ object TopRunFrac {
   }
 
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      TopRunFracExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-/** top_run_frac(array<string>) → double. */
-case class TopRunFracExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"top_run_frac expects array<string>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    TopRunFrac.fromArrayData(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TopRunFrac.fromArrayData($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TopRunFracExpression =
-    copy(child = newChild)
-  override def prettyName: String = "top_run_frac"
+    Kernel.call(this, "fromArrayData", DoubleType)(
+      Kernel.in(c, Kernel.StringArray))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Codegen'd vector primitives for embedding similarity.
@@ -12,7 +9,7 @@ import org.apache.spark.sql.types._
   * The composable alternative (`aggregate(zip_with(a, b, _*_), 0d, _+_)`)
   * is semantically identical but runs interpreted lambda closures per
   * element — ~20× slower on the all-pairs similarity joins, where the dot
-  * product IS the workload (n² pairs × dim multiplies). These expressions
+  * product IS the workload (n² pairs × dim multiplies). These kernels
   * evaluate as a single static-call tight loop inside whole-stage codegen,
   * with the same index-order double arithmetic (results are bit-identical
   * to the HOF formulation, so DuckDB oracles are unaffected).
@@ -88,12 +85,12 @@ object VectorOps {
   }
 
   def jaccard(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSorted(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "jaccardSorted", DoubleType)(
+      Kernel.in(a, Kernel.LongArray), Kernel.in(b, Kernel.LongArray))
 
   def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductF(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "dotF", DoubleType)(
+      Kernel.in(a, Kernel.FloatArray), Kernel.in(b, Kernel.FloatArray))
 
   /** Σ aᵢ·bᵢ over long arrays, accumulated as long — EXACT integer math
     * (the primitive a quantized-embedding tier scores with: int8 values
@@ -112,9 +109,15 @@ object VectorOps {
     acc
   }
 
+  /** dot_long(array<bigint>, array<bigint>) → bigint (exact; throws
+    * ArithmeticException on 64-bit overflow). NOT registered in the SQL
+    * function registry (GraftExtensions): the only caller is the int8 ANN
+    * tier, whose values are quantizer-bounded, so no user SQL or fuzz
+    * production can reach the overflow throw. Registering it for SQL would
+    * require documenting the exception in the registry help text first. */
   def dotLong(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductL(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "dotLL", LongType)(
+      Kernel.in(a, Kernel.LongArray), Kernel.in(b, Kernel.LongArray))
 
   /** Σ aᵢ·bᵢ over double arrays, accumulated in index order as double —
     * same deterministic fold as [[dotF]], for vectors that are already
@@ -131,145 +134,11 @@ object VectorOps {
   }
 
   def dotDouble(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductD(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.call(this, "dotDbl", DoubleType)(
+      Kernel.in(a, Kernel.DoubleArray), Kernel.in(b, Kernel.DoubleArray))
 
+  /** minhash32(array<bigint>) → array<bigint> (32 lanes). */
   def minhashSignature(hashes: Column): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(hashes)))
-}
-
-/** dot(array<float>, array<float>) → double. */
-case class DotProductF(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot expects (array<float>, array<float>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotF($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductF =
-    copy(left = l, right = r)
-  override def prettyName: String = "dot"
-}
-
-/** dot(array<double>, array<double>) → double. */
-case class DotProductD(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot_double expects (array<double>, array<double>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotDbl(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotDbl($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductD =
-    copy(left = l, right = r)
-  override def prettyName: String = "dot_double"
-}
-
-/** dot_long(array<bigint>, array<bigint>) → bigint (exact; throws
-  * ArithmeticException on 64-bit overflow — intended for quantized-domain
-  * vectors, e.g. int8 embeddings, where products are bounded by 127²).
-  * NOT registered in the SQL function registry (GraftExtensions): the only
-  * caller is the int8 ANN tier, whose values are quantizer-bounded, so no
-  * user SQL or fuzz production can reach the overflow throw. Registering
-  * it for SQL would require documenting the exception in the registry
-  * help text first. */
-case class DotProductL(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dot_long expects (array<bigint>, array<bigint>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotLL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotLL($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductL =
-    copy(left = l, right = r)
-  override def prettyName: String = "dot_long"
-}
-
-/** jaccard_sorted(array<bigint>, array<bigint>) → double. */
-case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"jaccard_sorted expects (array<bigint>, array<bigint>), got $other")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.jaccardSorted($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSorted =
-    copy(left = l, right = r)
-  override def prettyName: String = "jaccard_sorted"
-}
-
-/** minhash32(array<bigint>) → array<bigint> (32 lanes). */
-case class MinHashSignature(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash32 expects array<bigint>, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.minhash32(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorOps.minhash32($c)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashSignature =
-    copy(child = c)
-  override def prettyName: String = "minhash32"
+    Kernel.call(this, "minhash32", ArrayType(LongType, containsNull = false))(
+      Kernel.in(hashes, Kernel.LongArray))
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -87,31 +85,6 @@ object Winnow {
   }
 
   def apply(c: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      WinnowExpression(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-}
-
-/** winnow(string) → array<bigint>: sorted distinct winnowing fingerprints. */
-case class WinnowExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow expects string, got $other")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    Winnow.fingerprints(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Winnow.fingerprints($c)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowExpression =
-    copy(child = c)
-  override def prettyName: String = "winnow"
+    Kernel.call(this, "fingerprints", ArrayType(LongType, containsNull = false))(
+      Kernel.in(c, StringType))
 }

@@ -26,7 +26,7 @@ import graft.operators.{t, QueryFn}
   * independent arithmetic (the package-scaladoc monetary trick applied to
   * geometry) — so the trained centroids are bit-identical on any cluster
   * AND in DuckDB; cosines then accumulate in index order as double (the
-  * [[graft.functions.DotProductD]] codegen'd fold = DuckDB's
+  * [[graft.functions.VectorOps.dotDouble]] codegen'd fold = DuckDB's
   * `list_aggregate(..., 'sum')`) and round to 6 dp before the argmax, ties
   * breaking toward the lowest cluster id in both engines.
   *

@@ -22,7 +22,7 @@ import graft.operators.{t, QueryFn}
   */
 object SimilarityQueries {
 
-  // Codegen'd single-call dot product (graft.functions.DotProductF): same
+  // Codegen'd single-call dot product (graft.functions.VectorOps.dot): same
   // index-order double accumulation as the HOF formulation (bit-identical
   // results, DuckDB oracle unaffected), ~20x faster on all-pairs joins.
   private def dotD(a: Column, b: Column): Column =

@@ -119,6 +119,16 @@ class LocalClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
+  test("local-cluster specs parse in one place: Spark's whitespace " +
+      "accepted, a malformed spec refused (parse only)") {
+    import ClusterMode.{Spec, spec}
+    assert(spec("local-cluster[2,4,2048]").contains(Spec(2, 4, 2048)))
+    assert(spec("local-cluster[2, 4, 4096]").contains(Spec(2, 4, 4096)))
+    assert(spec("local[4]").isEmpty)
+    for (bad <- Seq("local-cluster[2,4]", "local-cluster[2,4,4g]"))
+      intercept[IllegalArgumentException](spec(bad))
+  }
+
   test("topology: two executor JVMs registered, distinct from the driver") {
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     var hosts = spark.sparkContext.getExecutorMemoryStatus
